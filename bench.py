@@ -262,17 +262,21 @@ def media_codec_workload() -> None:
 
 
 _ZSTD_PAYLOADS = None
+_ZSTD = {"id": "zstd", "level": 3}
 
 
 def zstd_codec_workload() -> None:
-    """The pure-Python RFC 8878 path, timed: decode a level-3
-    libzstd-compressed 768 KB float32 tile (sequence-dense, the
-    worst case), a text frame, and an RLE-heavy frame — the shapes a
+    """The production zstd chunk path (native, via pyarrow), timed:
+    decode a level-3 768 KB float32 tile (sequence-dense, the worst
+    case), a text frame, and an RLE-heavy frame — the shapes a
     zstd-COG / corpus pipeline actually decodes. Single-core on
     purpose: per-task decode rate is what scales with executors."""
     import numpy as np
 
-    from flytemosaic_spark.sources.zstd import decode_zstd, encode_zstd
+    from flytemosaic_spark.sources.codecs import (
+        compress_chunk,
+        decompress_chunk,
+    )
 
     global _ZSTD_PAYLOADS
     if _ZSTD_PAYLOADS is None:
@@ -284,9 +288,11 @@ def zstd_codec_workload() -> None:
             b"the quick brown fox jumps over the lazy dog %d\n" * 200
         ) % tuple(range(200)) * 8
         rle = b"\x00" * 200000 + b"ab" * 30000
-        _ZSTD_PAYLOADS = [encode_zstd(d, 3) for d in (tile, text, rle)]
+        _ZSTD_PAYLOADS = [
+            compress_chunk(d, _ZSTD) for d in (tile, text, rle)
+        ]
     for payload in _ZSTD_PAYLOADS:
-        decode_zstd(payload)
+        decompress_chunk(payload, _ZSTD)
 
 
 def flagship(spark, sf_dir):

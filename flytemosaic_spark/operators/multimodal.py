@@ -1776,10 +1776,9 @@ def synthesize_zstd_cogs(
     flytemosaic/datasets/utils.py:123-126). Pixels derive
     arithmetically from the key: ``px[y, x] = (k*31 + y*17 + x*7) %
     60001`` as uint16 over a 64x64 scene, encoded on executors with
-    32-px tiles (libzstd via pyarrow when present — genuinely
-    compressed Huffman+FSE streams — else valid store-mode frames;
-    both decode through the pure-Python RFC 8878 tier in
-    ``sources/zstd.py``). Each row also carries its per-key read
+    32-px tiles (zstd native, via pyarrow — genuinely compressed
+    Huffman+FSE streams, decoded the same way through
+    ``sources/codecs.py``). Each row also carries its per-key read
     window, so a downstream windowed decode exercises the
     cloud-optimized access path and an SQL oracle can recompute the
     expected pixel stats exactly."""

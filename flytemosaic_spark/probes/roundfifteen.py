@@ -612,8 +612,8 @@ def x254_txlog_optimize(spark: SparkSession, sf: str) -> DataFrame:
     note="Avro OCF scan in the gate (sources/avro.py — pure-stdlib "
     "Object Container File codec per the public Avro 1.11 spec: "
     "zigzag varints, blocks with per-block sync-marker verify, "
-    "null/deflate/snappy codecs — snappy through the repo's own "
-    "block codec with the spec's CRC-32 suffix — records incl. "
+    "null/deflate/snappy codecs — snappy native, via pyarrow, "
+    "with the spec's CRC-32 suffix — records incl. "
     "nested/recursive, arrays, maps, unions, enums, fixed): "
     "executors write key-derived records cycling the three codecs by "
     "key % 3 and decode back; the oracle recomputes every field "

@@ -1,16 +1,15 @@
 """Round-13 probes: the ZSTD codec tier inside the oracle gate, and
 the parameter-driven CRS surface (datum-shifted EPSG codes).
 
-``x234_zstd_cog`` puts the r7 RFC 8878 decoder
-(``sources/zstd.py``) in the gate the same way x222/x223 gate
-FLAC/MJPEG: executors encode REAL ZSTD-compressed tiled GeoTIFFs
-(the modern GDAL COG default — reference
+``x234_zstd_cog`` puts the zstd TIFF tile path (native, via
+pyarrow — ``sources/codecs.py``) in the gate the same way x222/x223
+gate FLAC/MJPEG: executors encode REAL ZSTD-compressed tiled
+GeoTIFFs (the modern GDAL COG default — reference
 flytemosaic/datasets/utils.py:123-126 reads any GDAL compression,
 and current GDAL writes COMPRESS=ZSTD) whose pixels derive
-arithmetically from the key, then WINDOWED-decode them — raw blocks,
-FSE tables, Huffman literals, sequences, repeat offsets, xxh64
-checksums all on the hot path — and emit exact integer pixel stats
-the DuckDB oracle recomputes from the generating arithmetic.
+arithmetically from the key, then WINDOWED-decode them and emit
+exact integer pixel stats the DuckDB oracle recomputes from the
+generating arithmetic.
 """
 
 from __future__ import annotations
@@ -47,13 +46,13 @@ from flytemosaic_spark.probes.registry import T, probe
     """,
     note="REAL ZSTD-in-TIFF round-trip IN the gate: executors encode "
     "key-derived uint16 scenes as tiled GeoTIFFs with compression "
-    "50000 (libzstd via pyarrow — genuinely compressed Huffman+FSE "
-    "streams), and cog_window_stats windowed-decodes each through the "
-    "pure-Python RFC 8878 decoder (sources/zstd.py) — only the tiles "
+    "50000 (genuinely compressed Huffman+FSE streams), and "
+    "cog_window_stats windowed-decodes each — zstd native, via "
+    "pyarrow (sources/codecs.py) — only the tiles "
     "intersecting the per-key window are decompressed, the "
     "cloud-optimized access path. The oracle recomputes the window's "
-    "pixel stats from the generating arithmetic, so one wrong symbol "
-    "anywhere in the FSE/Huffman/sequence pipeline fails the hash. "
+    "pixel stats from the generating arithmetic, so one wrong byte "
+    "anywhere in the tile pipeline fails the hash. "
     "Payloads never shuffle (mapInPandas, explicit repartition "
     "count); output is metadata-scale.",
 )
@@ -337,9 +336,9 @@ def x235_bpe_apply(spark: SparkSession, sf: str) -> DataFrame:
     """,
     note="Chunk-codec round-trip IN the gate: executors build a "
     "key-derived 4 KB uint8 chunk, push it through ALL FOUR registry "
-    "codecs (zlib, lz4, zstd, snappy — sources/codecs.py; lz4/snappy "
-    "are the r7 pure-stdlib implementations, zstd the RFC 8878 "
-    "decoder) compress->decompress on the worker, and emit exact "
+    "codecs (zlib, lz4, zstd, snappy — sources/codecs.py; zlib "
+    "through the stdlib, lz4/zstd/snappy native, via pyarrow) "
+    "compress->decompress on the worker, and emit exact "
     "integer stats summed across codecs — one wrong byte in any "
     "codec's round-trip shifts sum_val and fails the hash. The oracle "
     "recomputes the stats from the generating arithmetic (x4 for the "

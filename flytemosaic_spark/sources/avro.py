@@ -1,4 +1,5 @@
-"""Avro Object Container File (OCF) codec — pure stdlib.
+"""Avro Object Container File (OCF) codec — pure stdlib apart from
+the snappy block codec.
 
 The Kafka/data-engineering interchange staple the engine's source
 family lacked (S-row sibling of CSV/JSON/ORC/parquet): schema-embedded
@@ -9,8 +10,8 @@ binary rows in sync-marked blocks. Implemented from the public Avro
   JSON + ``avro.codec``), 16-byte sync marker; data blocks of
   (record count, byte size, payload, sync) with codecs ``null``,
   ``deflate`` (raw DEFLATE, stdlib zlib wbits=-15) and ``snappy``
-  (the repo's own ``sources/snappy.py`` block codec + CRC-32 suffix
-  per the spec);
+  (a raw snappy block, native via pyarrow through
+  ``sources/codecs.py``, + CRC-32 suffix per the spec);
 - binary encoding: zigzag varint int/long, little-endian IEEE
   float/double, length-prefixed bytes/string, records in field
   order, arrays/maps in count-prefixed blocks (negative count =
@@ -331,9 +332,12 @@ def decode_avro(data: bytes) -> tuple[dict, list]:
         elif codec == "snappy":
             if len(block) < 4:
                 raise AvroError("snappy block too short")
-            from flytemosaic_spark.sources.snappy import decompress as snappy_decompress
+            from flytemosaic_spark.sources.codecs import decompress_chunk
 
-            payload = snappy_decompress(block[:-4])
+            try:
+                payload = decompress_chunk(block[:-4], {"id": "snappy"})
+            except ValueError as e:
+                raise AvroError(f"bad snappy block: {e}") from e
             crc = struct.unpack(">I", block[-4:])[0]
             if zlib.crc32(payload) & 0xFFFFFFFF != crc:
                 raise AvroError("snappy block CRC mismatch")
@@ -387,9 +391,9 @@ def encode_avro(
             c = zlib.compressobj(6, zlib.DEFLATED, -15)
             payload = c.compress(bytes(body)) + c.flush()
         elif codec == "snappy":
-            from flytemosaic_spark.sources.snappy import compress as snappy_compress
+            from flytemosaic_spark.sources.codecs import compress_chunk
 
-            payload = snappy_compress(bytes(body)) + struct.pack(
+            payload = compress_chunk(bytes(body), {"id": "snappy"}) + struct.pack(
                 ">I", zlib.crc32(bytes(body)) & 0xFFFFFFFF
             )
         else:

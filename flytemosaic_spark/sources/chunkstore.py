@@ -13,7 +13,7 @@ bytes).
 
 The on-disk layout is genuine Zarr v2 — ``.zarray``/``.zattrs`` JSON
 plus C-order chunk files named ``t.b.y.x`` (compressor null, zlib,
-lz4, or zstd — numcodecs ids) — so
+lz4, zstd or snappy — numcodecs ids) — so
 any Zarr reader can open the result. Edge chunks are padded with the
 fill value, as the format requires.
 """
@@ -60,9 +60,9 @@ def write_template(
     ``compression_level`` enables the Zarr v2 ``zlib`` codec (a
     standard numcodecs id, stdlib-only here); ``compressor`` takes a
     numcodecs-style spec instead — ``"lz4"`` (real-world Zarr's usual
-    codec family, r7 pure-stdlib in ``sources/lz4.py``), ``"zstd"``
-    (pure-Python RFC 8878 read path), ``"zlib"``, or a full
-    ``{"id": ..., "level": ...}`` dict (``sources/codecs.py``). At
+    codec family), ``"zstd"``, ``"snappy"`` (all three native, via
+    pyarrow), ``"zlib"``, or a full ``{"id": ..., "level": ...}``
+    dict (``sources/codecs.py``). At
     100 TB the win is object-store bytes and network, paid with
     executor CPU — level-1 zlib or lz4 is the usual sweet spot for
     float rasters."""

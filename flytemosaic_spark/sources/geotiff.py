@@ -1,4 +1,4 @@
-"""Minimal REAL GeoTIFF codec — pure stdlib (struct + zlib) + numpy.
+"""Minimal REAL GeoTIFF codec — stdlib (struct + zlib) + numpy.
 
 The reference reads scene COGs and writes feature GeoTIFFs through
 GDAL (reference flytemosaic/datasets/utils.py:123-126,
@@ -17,10 +17,8 @@ end-to-end in this sandbox. JPEG tiles may be 8-bit (baseline or
 progressive) or 12-bit (bits=12 in the IFD, uint16 arrays — the GDAL
 convention); PackBits (32773) rounds out the classic compressions,
 and ZSTD (50000 — the modern GDAL COG default, ``-co
-COMPRESS=ZSTD``) decodes through the pure-Python RFC 8878 decoder in
-``sources/zstd.py`` (encode uses pyarrow's bundled libzstd when
-present, else the module's own REAL encoder — LZ matches +
-predefined-FSE sequence coding, frames libzstd itself accepts). Formats beyond the subset
+COMPRESS=ZSTD``) encodes and decodes native, via pyarrow's libzstd
+(``sources/codecs.py``). Formats beyond the subset
 (CCITT/JPEG2000/WebP compressions, arithmetic-coded JPEG, mixed
 per-band sample types) raise NotImplementedError naming the feature,
 same honesty contract as the other codec tiers.
@@ -307,9 +305,9 @@ def decode_geotiff(
         if comp == 32773:
             return _packbits_decode(raw)
         if comp == 50000:
-            from flytemosaic_spark.sources.zstd import decode_zstd
+            from flytemosaic_spark.sources.codecs import decompress_chunk
 
-            return decode_zstd(raw)
+            return decompress_chunk(raw, {"id": "zstd"})
         return raw
 
     def block(o, c, bh, bw):
@@ -458,9 +456,9 @@ def encode_geotiff(
     elif comp_code == 8:
         pack = zlib.compress
     elif comp_code == 50000:
-        from flytemosaic_spark.sources.zstd import encode_zstd
+        from flytemosaic_spark.sources.codecs import compress_chunk
 
-        pack = encode_zstd
+        pack = lambda b: compress_chunk(b, {"id": "zstd"})  # noqa: E731
     else:
         pack = lambda b: b  # noqa: E731
 

@@ -1,12 +1,12 @@
-"""RFC 8878 zstd decoder tests.
+"""zstd chunk and TIFF tile decoding through the public codec API.
 
-Real compressed streams come from the libzstd bundled with pyarrow
-(every compression level exercises the Huffman + FSE + sequence
-paths); the pure-stdlib store-mode encoder is cross-checked in BOTH
-directions (our decoder reads libzstd frames; libzstd reads ours).
-The TIFF integration rows mirror the DEFLATE/LZW codec matrix —
-ZSTD (code 50000) is the modern GDAL COG default the reference reads
-via GDAL (reference flytemosaic/datasets/utils.py:123-126).
+Real compressed streams come from libzstd (every compression level
+exercises the Huffman + FSE + sequence paths); hand-built frames
+cover what libzstd's encoder does not emit: raw (store-mode) blocks,
+content checksums, dictionary ids and the long sequence-count form.
+The TIFF integration rows mirror the DEFLATE/LZW codec matrix — ZSTD
+(code 50000) is the modern GDAL COG default the reference reads via
+GDAL (reference flytemosaic/datasets/utils.py:123-126).
 """
 
 import random
@@ -14,45 +14,56 @@ import struct
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
-from hypothesis import strategies as st
 
-from flytemosaic_spark.sources.zstd import (
-    decode_zstd,
-    encode_zstd,
-    encode_zstd_store,
-    xxh64,
-)
+from flytemosaic_spark.sources.codecs import compress_chunk, decompress_chunk
 
-
-def _libzstd():
-    import pyarrow as pa
-
-    if not pa.Codec.is_available("zstd"):
-        pytest.skip("pyarrow built without zstd")
-    return pa
+_MAGIC = 0xFD2FB528
+ZSTD = {"id": "zstd"}
 
 
 def _compress(data: bytes, level: int = 3) -> bytes:
-    pa = _libzstd()
-    return pa.Codec("zstd", compression_level=level).compress(
-        data, asbytes=True
-    )
+    return compress_chunk(data, {"id": "zstd", "level": level})
+
+
+def decode(payload: bytes) -> bytes:
+    return decompress_chunk(payload, ZSTD)
+
+
+def store_frame(data: bytes, checksum: int | None = None) -> bytes:
+    """One zstd frame of RAW blocks (what a store-mode writer emits):
+    single segment, 4-byte content size, optional content checksum."""
+    fhd = 0xA0 | (0x04 if checksum is not None else 0)
+    out = struct.pack("<IBI", _MAGIC, fhd, len(data))
+    step = 1 << 16
+    for off in range(0, len(data), step) or [0]:
+        chunk = data[off : off + step]
+        last = int(off + step >= len(data))
+        out += ((len(chunk) << 3) | last).to_bytes(3, "little") + chunk
+    if checksum is not None:
+        out += struct.pack("<I", checksum)
+    return out
+
+
+# published xxHash64 vectors (seed 0); a zstd content checksum is the
+# low 32 bits of the content's xxh64
+XXH64 = {
+    b"": 0xEF46DB3751D8E999,
+    b"a": 0xD24EC4F1A98C6E5B,
+    b"abc": 0x44BC2CF5AD770999,
+    b"abcdefghijklmnopqrstuvwxyz0123456789": 0x64F23ECF1609B766,
+}
 
 
 class TestXxh64:
     def test_reference_vectors(self):
-        # published xxHash64 test vectors (seed 0)
-        assert xxh64(b"") == 0xEF46DB3751D8E999
-        assert xxh64(b"a") == 0xD24EC4F1A98C6E5B
-        assert xxh64(b"abc") == 0x44BC2CF5AD770999
-        assert (
-            xxh64(b"abcdefghijklmnopqrstuvwxyz0123456789")
-            == 0x64F23ECF1609B766
-        )
-
-    def test_seeded(self):
-        assert xxh64(b"abc", seed=1) != xxh64(b"abc")
+        """Frames carrying the xxh64 reference checksum decode; the
+        same frame with another vector's checksum is rejected."""
+        vectors = list(XXH64.items())
+        for i, (data, h) in enumerate(vectors):
+            assert decode(store_frame(data, h & 0xFFFFFFFF)) == data
+            other = vectors[(i + 1) % len(vectors)][1]
+            with pytest.raises(ValueError, match="checksum"):
+                decode(store_frame(data, other & 0xFFFFFFFF))
 
 
 def _datasets():
@@ -78,7 +89,7 @@ class TestDecodeRealStreams:
     def test_all_levels_all_shapes(self, level):
         for name, data in _datasets().items():
             comp = _compress(data, level)
-            assert decode_zstd(comp) == data, (name, level)
+            assert decode(comp) == data, (name, level)
 
     def test_large_multi_block(self):
         # > 128 KB regenerated: several compressed blocks in one frame,
@@ -89,11 +100,11 @@ class TestDecodeRealStreams:
             .astype("i2")
             .tobytes()
         )
-        assert decode_zstd(_compress(data, 3)) == data
+        assert decode(_compress(data, 3)) == data
 
     def test_multi_frame_concat(self):
         a, b = b"first frame|", b"second frame"
-        assert decode_zstd(_compress(a) + _compress(b)) == a + b
+        assert decode(_compress(a) + _compress(b)) == a + b
 
     def test_skippable_frame(self):
         payload = (
@@ -102,68 +113,52 @@ class TestDecodeRealStreams:
             + b"META!!"
             + _compress(b"tail")
         )
-        assert decode_zstd(payload) == b"headtail"
+        assert decode(payload) == b"headtail"
 
 
 class TestStoreMode:
     @pytest.mark.parametrize("n", [0, 1, 255, 256, 70_000, 200_000])
     def test_round_trip_own_decoder(self, n):
+        # raw-block frames, several blocks past 64 KB
         data = bytes((i * 7) & 0xFF for i in range(n))
-        assert decode_zstd(encode_zstd_store(data)) == data
-
-    def test_libzstd_accepts_store_frames(self):
-        pa = _libzstd()
-        codec = pa.Codec("zstd")
-        for n in (0, 1, 255, 300, 70_000):
-            data = bytes((i * 13) & 0xFF for i in range(n))
-            got = codec.decompress(
-                encode_zstd_store(data), n, asbytes=True
-            )
-            assert got == data
+        assert decode(store_frame(data)) == data
 
     def test_encode_zstd_prefers_real_compression(self):
         data = b"compressible " * 5000
-        out = encode_zstd(data)
-        assert decode_zstd(out) == data
-        # with pyarrow present this must actually compress
-        _libzstd()
+        out = _compress(data)
+        assert decode(out) == data
         assert len(out) < len(data) // 2
 
 
 class TestCorruptInput:
     def test_bad_magic(self):
-        with pytest.raises(ValueError, match="magic"):
-            decode_zstd(b"\x00\x01\x02\x03rest")
+        with pytest.raises(ValueError, match="zstd"):
+            decode(b"\x00\x01\x02\x03rest")
 
     def test_checksum_mismatch(self):
-        frame = bytearray(encode_zstd_store(b"payload bytes"))
+        frame = bytearray(store_frame(b"abc", XXH64[b"abc"] & 0xFFFFFFFF))
+        assert decode(bytes(frame)) == b"abc"
         frame[-1] ^= 0xFF
         with pytest.raises(ValueError, match="checksum"):
-            decode_zstd(bytes(frame))
-        # opt-out path still decodes
-        assert (
-            decode_zstd(bytes(frame), verify_checksum=False)
-            == b"payload bytes"
-        )
+            decode(bytes(frame))
 
     def test_dictionary_frame_raises(self):
         # hand-build a frame header with a 1-byte nonzero dictionary id
-        hdr = struct.pack("<I", 0xFD2FB528) + bytes([0x21, 7, 5]) + b"x" * 8
-        with pytest.raises(NotImplementedError, match="dictionary"):
-            decode_zstd(hdr)
+        hdr = struct.pack("<I", _MAGIC) + bytes([0x21, 7, 5]) + b"x" * 8
+        with pytest.raises(ValueError, match="(?i)dictionary"):
+            decode(hdr)
 
     def test_truncated_sequences_raise(self):
-        comp = bytearray(_compress(bytes(range(256)) * 300, 3))
-        comp = comp[: len(comp) // 2]
+        comp = _compress(bytes(range(256)) * 300, 3)
         # any structured error is fine; silent wrong output is not
-        with pytest.raises((ValueError, IndexError, struct.error)):
-            decode_zstd(bytes(comp))
+        with pytest.raises(ValueError):
+            decode(comp[: len(comp) // 2])
 
-
-@settings(max_examples=25, deadline=None)
-@given(st.binary(min_size=0, max_size=4000), st.sampled_from([1, 3, 9]))
-def test_property_round_trip(data, level):
-    assert decode_zstd(_compress(data, level)) == data
+    def test_forged_content_size_raises(self):
+        frame = bytearray(store_frame(b"abc"))
+        frame[5] = 9  # the 4-byte content size now claims 9 bytes
+        with pytest.raises(ValueError):
+            decode(bytes(frame))
 
 
 class TestTiffZstd:
@@ -222,21 +217,21 @@ class TestTiffZstd:
             assert np.array_equal(px, ia), kw
 
     def test_store_fallback_frame_still_decodes(self, monkeypatch):
-        # simulate a pyarrow-less worker: encode_zstd falls back to
-        # store framing, which must remain a decodable TIFF
-        import flytemosaic_spark.sources.zstd as z
+        # a writer that emits raw-block (store-mode) zstd tiles must
+        # still produce a decodable TIFF
+        import flytemosaic_spark.sources.codecs as codecs
         from flytemosaic_spark.sources.geotiff import (
             decode_geotiff,
             encode_geotiff,
         )
 
+        # geotiff.py imports compress_chunk inside the function, so the
+        # monkeypatched symbol is picked up per call
         monkeypatch.setattr(
-            z, "encode_zstd", lambda d, level=3: z.encode_zstd_store(d)
+            codecs, "compress_chunk", lambda d, comp: store_frame(d)
         )
         rng = np.random.default_rng(6)
         arr = rng.integers(0, 255, (50, 60), dtype=np.uint8)
-        # geotiff.py imports encode_zstd inside the function, so the
-        # monkeypatched symbol is picked up per call
         px, _ = decode_geotiff(encode_geotiff(arr, tile=32,
                                               compress="zstd"))
         assert np.array_equal(px[:, :, 0], arr)
@@ -247,10 +242,8 @@ class TestFuzzRobustness:
         """Random bit flips in a valid frame must either decode (a
         self-consistent mutation — zstd without the checksum flag has
         no integrity cover, which is why the TIFF tier keeps tile
-        byte counts) or raise an ordinary exception. Never a hang and
-        never an unbounded allocation."""
-        import random
-
+        byte counts) or raise ValueError. Never a hang and never an
+        unbounded allocation."""
         rng = np.random.default_rng(3)
         random.seed(99)
         base = _compress(
@@ -264,140 +257,45 @@ class TestFuzzRobustness:
             for _ in range(random.randint(1, 4)):
                 buf[random.randrange(len(buf))] ^= 1 << random.randrange(8)
             try:
-                out = decode_zstd(bytes(buf))
+                out = decode(bytes(buf))
                 assert len(out) <= len(base) * 64  # sane expansion
-            except Exception:
+            except ValueError:
                 pass  # structured failure is the expected outcome
 
     def test_block_expansion_cap(self):
-        """A hostile block claiming enormous match lengths must be
-        stopped at the spec's 128 KB block cap, not after allocating
-        the claimed gigabytes."""
-        import flytemosaic_spark.sources.zstd as z
-
-        # build a tiny compressed block by round-tripping, then lie
-        # about the frame content size and splice in an RLE literals
-        # run that, with repeat-offset matches, would exceed the cap
-        # if uncapped. Simplest robust check: the cap constant is
-        # enforced in _decode_block via max_end.
         src = b"ab" * 70000  # 140 KB input -> must span >1 block
         frame = _compress(src, 1)
-        assert decode_zstd(frame) == src  # multi-block stays correct
+        assert decode(frame) == src  # multi-block stays correct
 
 
 class TestOwnEncoder:
-    """The dependency-free REAL encoder (LZ matches + predefined-FSE
-    sequence coding, raw literals): every frame must decode with BOTH
-    libzstd and our decoder."""
-
-    def test_round_trip_both_decoders(self):
-        from flytemosaic_spark.sources.zstd import compress_zstd
-
-        pa = _libzstd()
-        codec = pa.Codec("zstd")
-        for name, data in _datasets().items():
-            frame = compress_zstd(data)
-            assert decode_zstd(frame) == data, name
-            assert (
-                codec.decompress(frame, len(data), asbytes=True) == data
-            ), name
+    """The zstd chunk encoder: real compression, any size."""
 
     def test_compression_is_real(self):
-        from flytemosaic_spark.sources.zstd import compress_zstd
-
         rep = b"the same phrase over and over " * 800
-        assert len(compress_zstd(rep)) < len(rep) // 50
+        assert len(_compress(rep)) < len(rep) // 50
         zeros = b"\x00" * 300000
-        assert len(compress_zstd(zeros)) < 100
+        assert len(_compress(zeros)) < 100
 
     def test_multi_block_boundary(self):
-        # > 128 KB forces several blocks; matches never cross the
-        # block boundary by construction but decode must still chain
-        from flytemosaic_spark.sources.zstd import compress_zstd
-
+        # > 128 KB forces several blocks
         data = (b"abcdefgh" * 40000)[: (1 << 17) + 12345]
-        frame = compress_zstd(data)
-        assert decode_zstd(frame) == data
-        pa = _libzstd()
-        assert (
-            pa.Codec("zstd").decompress(frame, len(data), asbytes=True)
-            == data
-        )
-
-    def test_checksum_written_and_verified(self):
-        from flytemosaic_spark.sources.zstd import compress_zstd
-
-        frame = bytearray(compress_zstd(b"payload " * 50))
-        frame[-1] ^= 0xFF
-        with pytest.raises(ValueError, match="checksum"):
-            decode_zstd(bytes(frame))
-
-
-@settings(max_examples=30, deadline=None)
-@given(st.binary(min_size=0, max_size=5000))
-def test_own_encoder_property_round_trip(data):
-    from flytemosaic_spark.sources.zstd import compress_zstd
-
-    assert decode_zstd(compress_zstd(data)) == data
-
-
-class TestHuffmanLiterals:
-    def test_huffman_only_block_matches_libzstd_rate(self):
-        """Skewed ASCII with no LZ matches: the encoder must emit a
-        0-sequence Huffman-literal block and land near libzstd's
-        entropy rate, and the frame must decode with both decoders."""
-        from flytemosaic_spark.sources.zstd import compress_zstd
-
-        rng = np.random.default_rng(5)
-        data = bytes(
-            rng.integers(32, 120, 50000, dtype=np.int64).astype("u1")
-        )
-        mine = compress_zstd(data)
-        assert decode_zstd(mine) == data
-        pa = _libzstd()
-        codec = pa.Codec("zstd")
-        assert codec.decompress(mine, len(data), asbytes=True) == data
-        real = len(codec.compress(data, asbytes=True))
-        assert len(mine) < len(data) * 0.85
-        assert len(mine) < real * 1.05  # within 5% of libzstd here
-
-    def test_sequences_with_huffman_literals(self):
-        from flytemosaic_spark.sources.zstd import compress_zstd
-
-        # repetitive phrases (matches) + skewed ASCII gaps (huffman)
-        rng = np.random.default_rng(6)
-        pieces = []
-        for k in range(300):
-            pieces.append(b"common phrase %d " % (k % 7))
-            pieces.append(
-                bytes(rng.integers(97, 110, 40, dtype=np.int64)
-                      .astype("u1"))
-            )
-        data = b"".join(pieces)
-        mine = compress_zstd(data)
-        assert decode_zstd(mine) == data
-        pa = _libzstd()
-        assert (
-            pa.Codec("zstd").decompress(mine, len(data), asbytes=True)
-            == data
-        )
-        assert len(mine) < len(data) // 2
+        assert decode(_compress(data)) == data
 
 
 class TestLongFormSequenceCount:
     """RFC 8878 §3.1.1.3.2.1: the 3-byte Number_of_Sequences form is
     byte1 + (byte2<<8) + 0x7F00 (ADDITIVE — low bits of byte2 must
-    survive). Hand-built frame with n_seq = 0x8000, cross-checked
-    against libzstd."""
+    survive). Hand-built frame with n_seq up to 0x8000."""
 
     @staticmethod
-    def _frame(n_seq: int) -> tuple[bytes, int]:
+    def _frame(n_seq: int) -> tuple[bytes, bytes]:
         # every sequence: 1 literal (LL RLE sym 1) + a 3-byte match at
         # repeat-offset 1 (OF sym 0 -> offset_value 1, ML sym 0 ->
         # len 3); all-RLE tables read zero bitstream bits, so the
         # sequence bitstream is just the padding start-bit byte.
         lits = bytes((i * 37 + 11) & 0xFF for i in range(n_seq))
-        content_size = len(lits) + 3 * n_seq
+        content = b"".join(bytes([c]) * 4 for c in lits)
         sz = len(lits)  # raw literals, 20-bit size form
         block = bytes(
             [0x00 | (0b11 << 2) | ((sz & 0xF) << 4),
@@ -410,19 +308,13 @@ class TestLongFormSequenceCount:
             block += bytes([0xFF, lo & 0xFF, lo >> 8])
         block += bytes([0b01010100, 1, 0, 0, 0x01])
         hdr = 1 | (2 << 1) | (len(block) << 3)
-        frame = struct.pack("<I", 0xFD2FB528)
+        frame = struct.pack("<I", _MAGIC)
         frame += bytes([0xA0])  # single-segment, 4-byte FCS, no checksum
-        frame += struct.pack("<I", content_size)
+        frame += struct.pack("<I", len(content))
         frame += hdr.to_bytes(3, "little") + block
-        return frame, content_size
+        return frame, content
 
     @pytest.mark.parametrize("n_seq", [1, 127, 0x7F00, 0x7FFF, 0x8000])
     def test_matches_libzstd(self, n_seq):
-        pa = _libzstd()
-        frame, content_size = self._frame(n_seq)
-        want = pa.Codec("zstd").decompress(
-            frame, decompressed_size=content_size, asbytes=True
-        )
-        got = decode_zstd(frame)
-        assert got == want
-        assert len(got) == content_size
+        frame, content = self._frame(n_seq)
+        assert decode(frame) == content
