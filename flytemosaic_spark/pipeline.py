@@ -37,7 +37,13 @@ from pyspark.sql import functions as F
 from flytemosaic_spark.functions.temporal import clamp, date_to_period
 from flytemosaic_spark.operators.catalog import EARLIEST, feature_targets
 from flytemosaic_spark.operators.raster import QA_CLEAR
-from flytemosaic_spark.sources.chunkstore import read_template, write_template
+from flytemosaic_spark.sources.chunkstore import (
+    list_chunks,
+    read_chunk,
+    read_template,
+    write_chunk,
+    write_template,
+)
 
 
 def synthetic_scene(tile_id: str, period: int, n_bands: int, size: int) -> np.ndarray:
@@ -168,12 +174,10 @@ def build_mosaic(
     # the store — the reference's rerun-and-skip core (scenes.py:219-232)
     # applied at the mosaic layer. The listing is metadata-scale.
     if skip_existing:
-        existing = [
-            n.split(".") for n in os.listdir(store_path) if not n.startswith(".")
-        ]
+        existing = list_chunks(store_path)
         if existing:
             done = spark.createDataFrame(
-                [(int(t), int(y) * out_px, int(x) * out_px) for t, _, y, x in existing],
+                [(t, y * out_px, x * out_px) for t, _, y, x in existing],
                 "t int, oy int, ox int",
             )
             done_targets = (
@@ -211,7 +215,6 @@ def build_mosaic(
     # and the difference between ~0.02 and ~1 GiB/s per node: a staged
     # formulation pays Arrow/UnsafeRow serialization on every hop.
     meta = read_template(store_path)
-    compressor = meta.get("compressor")
     stats_schema = "tile_id string, time timestamp, n_chunks int"
 
     reader = scene_reader or synthetic_scene
@@ -259,15 +262,7 @@ def build_mosaic(
         # by construction (chunk == one tile slab)
         y0, x0 = origin[tile]
         ti = t_index[pd.Timestamp(time).to_pydatetime()]
-        cidx = (ti, 0, y0 // out_px, x0 // out_px)
-        from flytemosaic_spark.sources.codecs import compress_chunk
-
-        payload = compress_chunk(comp.tobytes(order="C"), compressor)
-        fname = os.path.join(store_path, ".".join(map(str, cidx)))
-        tmp = f"{fname}.tmp-{os.getpid()}"
-        with open(tmp, "wb") as f:
-            f.write(payload)
-        os.replace(tmp, fname)  # atomic → idempotent retries
+        write_chunk(store_path, meta, (ti, 0, y0 // out_px, x0 // out_px), comp)
         return pd.DataFrame(
             {"tile_id": [tile], "time": [time], "n_chunks": [1]}
         )
@@ -322,11 +317,8 @@ def export_feature_geotiffs(
         # NaN is only representable in float sample types; an integer
         # store gets no nodata tag unless the caller names a real value
         nodata = float("nan") if np.dtype(zdtype).kind == "f" else None
-    compressor = meta.get("compressor")
-    names = [n for n in os.listdir(store_path) if not n.startswith(".")]
     manifest = spark.createDataFrame(
-        [(os.path.join(store_path, n), *map(int, n.split("."))) for n in names],
-        "file string, t int, b int, yi int, xi int",
+        list_chunks(store_path), "t int, b int, yi int, xi int"
     )
     os.makedirs(out_dir, exist_ok=True)
     schema = "file string, t int, yi int, xi int, ok boolean"
@@ -336,21 +328,12 @@ def export_feature_geotiffs(
 
         for pdf in batches:
             out = []
-            for f, t, yi, xi in zip(
-                pdf["file"], pdf["t"], pdf["yi"], pdf["xi"]
-            ):
+            for t, b, yi, xi in zip(pdf["t"], pdf["b"], pdf["yi"], pdf["xi"]):
                 dst = os.path.join(out_dir, f"t{t}_y{yi}_x{xi}.tif")
                 if os.path.exists(dst):  # rerun-is-cheap recheck
                     out.append((dst, t, yi, xi, True))
                     continue
-                from flytemosaic_spark.sources.codecs import (
-                    decompress_chunk,
-                )
-
-                with open(f, "rb") as fh:
-                    raw = fh.read()
-                raw = decompress_chunk(raw, compressor)
-                arr = np.frombuffer(raw, dtype=zdtype).reshape(zchunks[1:])
+                arr = read_chunk(store_path, meta, (t, b, yi, xi))[0]
                 ny = zchunks[2]
                 tif = encode_geotiff(
                     np.moveaxis(arr, 0, -1),  # (b, y, x) -> chunky
@@ -378,6 +361,4 @@ def export_feature_geotiffs(
                 out, columns=["file", "t", "yi", "xi", "ok"]
             )
 
-    return manifest.select("file", "t", "yi", "xi").mapInPandas(
-        export, schema
-    )
+    return manifest.mapInPandas(export, schema)

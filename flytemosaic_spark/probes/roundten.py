@@ -252,7 +252,7 @@ def x15c_mosaic_geotiff_lifecycle(spark: SparkSession, sf: str) -> DataFrame:
         export_feature_geotiffs,
         synthetic_scene,
     )
-    from flytemosaic_spark.sources.chunkstore import read_template
+    from flytemosaic_spark.sources.chunkstore import read_chunk, read_template
     from flytemosaic_spark.sources.geotiff import (
         decode_geotiff,
         encode_geotiff,
@@ -287,19 +287,10 @@ def x15c_mosaic_geotiff_lifecycle(spark: SparkSession, sf: str) -> DataFrame:
         )
         cogs = os.path.join(d, "cogs")
         exported = export_feature_geotiffs(spark, store, cogs).collect()
-        from flytemosaic_spark.sources.codecs import decompress_chunk
-
         meta = read_template(store)
         n_match = 0
         for r in exported:
-            t, yi, xi = r.t, r.yi, r.xi
-            raw = decompress_chunk(
-                open(os.path.join(store, f"{t}.0.{yi}.{xi}"), "rb").read(),
-                meta.get("compressor"),
-            )
-            want = np.frombuffer(raw, dtype=meta["dtype"]).reshape(
-                meta["chunks"][1:]
-            )
+            want = read_chunk(store, meta, (r.t, 0, r.yi, r.xi))[0]
             px, _ = decode_geotiff(open(r.file, "rb").read())
             if np.array_equal(np.moveaxis(px, -1, 0), want, equal_nan=True):
                 n_match += 1

@@ -1,7 +1,7 @@
 """Chunk-payload codec registry — numcodecs-compatible ids.
 
-The chunk stores (``sources/chunkstore.py`` / ``chunkstore_v2.py``)
-declare their compressor in ``.zarray`` exactly like Zarr v2 /
+The chunk store (``sources/chunkstore.py``) declares its compressor
+in ``.zarray`` exactly like Zarr v2 /
 numcodecs: ``None`` (raw), ``{"id": "zlib", "level": n}``,
 ``{"id": "lz4"}`` (4-byte LE size prefix + LZ4 block — the numcodecs
 wire format, real-world Zarr's most common codec family),

@@ -10,11 +10,14 @@ import pytest
 
 from flytemosaic_spark.plans.partitioner import plan_partitions
 from flytemosaic_spark.sources.chunkstore import (
+    ChunkStoreStreamReader,
+    list_chunks,
     read_array,
+    read_store,
+    register,
     write_region_chunks,
     write_template,
 )
-from flytemosaic_spark.sources.chunkstore_v2 import register
 
 SHAPE = (2, 3, 40, 50)
 CHUNKS = (1, 3, 16, 16)
@@ -70,7 +73,7 @@ def test_datasource_read_roundtrip(spark, tmp_path):
 
 
 def test_filter_pushdown_prunes_files(spark, tmp_path):
-    path, cube, df = _store(spark, tmp_path)
+    path, cube, df = _store(spark, tmp_path, compression=1)
     write_region_chunks(df, path)
     def fresh():
         return spark.read.format("chunkstore").option("path", path).load()
@@ -79,6 +82,38 @@ def test_filter_pushdown_prunes_files(spark, tmp_path):
     assert rows and all(r.t == 1 and r.y0 >= 16 for r in rows)
     # pruned scan returns fewer chunk rows than the full scan
     assert len(rows) < fresh().count()
+
+    # a pruned file is never opened: an undecodable t=0 chunk cannot
+    # fail a t=1 scan, through the format or through read_store
+    with open(os.path.join(path, "0.0.0.0"), "wb") as f:
+        f.write(b"not a zlib stream")
+    for scan in (fresh(), read_store(spark, path)):
+        rows = scan.where("t = 1").collect()
+        assert len(rows) == 12 and all(r.t == 1 for r in rows)
+    with pytest.raises(Exception, match="0.0.0.0|zlib|decompress"):
+        fresh().where("t = 0").collect()
+
+
+def test_scan_plans_one_task_per_core(spark, tmp_path):
+    """A 32-file store is split across the cores instead of one task
+    reading every file serially."""
+    path = str(tmp_path / "store32")
+    write_template(path, (2, 1, 64, 64), (1, 1, 16, 16))
+    cube = np.arange(2 * 64 * 64, dtype="f4").reshape(2, 1, 64, 64)
+    rows = [(t, 0, 0, 0, [1, 64, 64], cube[t].ravel().tolist()) for t in range(2)]
+    df = spark.createDataFrame(
+        rows, "t int, b0 int, y0 int, x0 int, shape array<int>, payload array<float>"
+    )
+    write_region_chunks(df, path)
+    assert len(list_chunks(path)) == 32
+    scan = spark.read.format("chunkstore").option("path", path).load()
+    if (os.cpu_count() or 1) > 1:
+        assert scan.rdd.getNumPartitions() > 1
+    got = sorted((r.t, r.y0, r.x0, r.payload[0]) for r in scan.collect())
+    assert got == sorted(
+        (t, y, x, float(cube[t, 0, y, x]))
+        for t in range(2) for y in range(0, 64, 16) for x in range(0, 64, 16)
+    )
 
 
 def test_empty_result_when_filter_excludes_all(spark, tmp_path):
@@ -141,28 +176,26 @@ def test_stream_reader_tails_new_chunks(spark, tmp_path):
 
 
 def test_in_flight_tmp_files_are_invisible(spark, tmp_path):
-    """A writer's in-flight '<t>.<b>.<y>.<x>.tmp-<pid>' must be
-    skipped by BOTH the batch partition listing and the stream
-    reader's seen-set — a micro-batch that lists mid-write would
-    otherwise crash on map(int, name.split('.'))."""
+    """A writer's in-flight (or a killed writer's leftover)
+    '<t>.<b>.<y>.<x>.tmp-<pid>' must be skipped by the batch
+    partition listing, read_store, read_array and the stream reader's
+    seen-set — a listing that saw it would otherwise crash on
+    int('tmp-<pid>')."""
     path, cube, df = _store(spark, tmp_path)
     write_region_chunks(df, path)
     batch = spark.read.format("chunkstore").option("path", path).load()
     n = batch.count()
 
-    # simulate a writer mid-write: the tmp name a parallel region
-    # writer actually uses (chunkstore_v2 writer line ~193)
+    # simulate a writer mid-write: the tmp name write_chunk uses
     with open(os.path.join(path, "9.9.9.9.tmp-12345"), "wb") as f:
         f.write(b"partial")
 
     again = spark.read.format("chunkstore").option("path", path).load()
     assert again.count() == n  # batch listing unaffected
-
-    from flytemosaic_spark.sources.chunkstore_v2 import (
-        ChunkStoreStreamReader,
-    )
+    assert read_store(spark, path).count() == n
+    np.testing.assert_array_equal(read_array(path), cube)
 
     r = ChunkStoreStreamReader({"path": path})
-    assert all(".tmp-" not in name for name in r._chunk_files())
+    assert (9, 9, 9, 9) not in list_chunks(path)
     rows, off = r.read(r.initialOffset())
     assert len(list(rows)) == n

@@ -152,7 +152,7 @@ class TestChunkstoreCodecs:
             "t int, b0 int, y0 int, x0 int, shape array<int>, "
             "payload array<float>",
         )
-        from flytemosaic_spark.sources.chunkstore_v2 import register
+        from flytemosaic_spark.sources.chunkstore import register
 
         register(spark)
         (

@@ -14,6 +14,7 @@ from flytemosaic_spark.fixtures import tile_grid
 from flytemosaic_spark.operators.raster import QA_CLEAR
 from flytemosaic_spark.pipeline import (
     build_mosaic,
+    export_feature_geotiffs,
     synthetic_scene,
     target_scene_periods,
 )
@@ -128,3 +129,22 @@ def test_mosaic_skip_existing(spark, tmp_path):
                      n_bands=N_BANDS, tile_px=TILE_PX, skip_existing=True)
     assert b["n_chunks_written"] == 0
     np.testing.assert_array_equal(read_array(store), before)
+
+
+def test_leftover_tmp_file_does_not_break_rerun_or_export(spark, tmp_path):
+    """A killed writer's '<t>.<b>.<y>.<x>.tmp-<pid>' leftover is not a
+    chunk: the skip_existing rerun meant to recover from the failure
+    writes nothing, and the export skips it."""
+    tiles = tile_grid(spark, n=4)
+    store = str(tmp_path / "mosaic")
+    a = build_mosaic(spark, tiles, (0, 0, 2, 1), [TIMES[0]], store,
+                     n_bands=N_BANDS, tile_px=TILE_PX)
+    before = read_array(store).copy()
+    with open(f"{store}/0.0.0.0.tmp-4242", "wb") as f:
+        f.write(b"partial")
+    b = build_mosaic(spark, tiles, (0, 0, 2, 1), [TIMES[0]], store,
+                     n_bands=N_BANDS, tile_px=TILE_PX, skip_existing=True)
+    assert b["n_chunks_written"] == 0
+    np.testing.assert_array_equal(read_array(store), before)
+    cogs = export_feature_geotiffs(spark, store, str(tmp_path / "cogs")).collect()
+    assert len(cogs) == a["n_chunks_written"] and all(r.ok for r in cogs)
